@@ -17,10 +17,10 @@ This module makes a single small JSON object the source of truth instead:
   or retired by a compaction are simply invisible — no reader can ever
   observe a half-published state, an absent cell, or a duplicate row.
 - WRITERS stage new part files into the live ``cell=`` directories under
-  fresh unique names (invisible until committed) and COMMIT by atomically
-  replacing the manifest — ``os.replace`` on a local filesystem; on an
-  object store a direct single-object PUT, which is itself atomic (and
-  read-after-write consistent on S3 since 2020).
+  fresh unique names (invisible until committed) and COMMIT the new
+  manifest through the generation-numbered OCC commit log in commitlog.py
+  (put-if-absent ``_commits/`` files, ``_manifest.json`` as the refreshed
+  read cache — the same log versioned tables commit through).
 - Compaction RETIRES the files it replaced: they are recorded in the new
   manifest and physically deleted one generation later (``retired``), so a
   reader that resolved the previous manifest an instant before the commit
@@ -28,8 +28,8 @@ This module makes a single small JSON object the source of truth instead:
   cannot offer.
 
 Crash safety, by construction: every mutation is (stage files) then
-(replace manifest) then (optionally delete previous generation's retired
-files). A crash before the manifest replace leaves orphan files no reader
+(commit manifest) then (optionally delete previous generation's retired
+files). A crash before the manifest commit leaves orphan files no reader
 resolves (reaped by ``manifest_vacuum``); a crash after it leaves the new
 snapshot fully committed. There is no crash point that loses bytes a
 committed manifest references.
@@ -53,19 +53,16 @@ No query registrations here — import-order-neutral (registry invariant).
 
 from __future__ import annotations
 
-import json
-import os
 import uuid
 
-import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commitlog
+from ..commitlog import COMMIT_GRACE, COMMITS_DIR  # noqa: F401 — re-exported
 from ..fs import CatalogFS, ConcurrentWriteError, resolve_database
 
 MANIFEST = "_manifest.json"  # read cache (the commit log is authoritative)
-COMMITS_DIR = "_commits"  # generation-numbered OCC commit log
-COMMIT_GRACE = 3  # manifest_vacuum keeps this many trailing commit files
 
 
 def _ifs(path: str) -> tuple[CatalogFS, str]:
@@ -75,86 +72,30 @@ def _ifs(path: str) -> tuple[CatalogFS, str]:
     return cfs, cfs.root
 
 
-def _commit_path(cfs: CatalogFS, root: str, gen: int) -> str:
-    return cfs.join(root, COMMITS_DIR, f"{gen:012d}.json")
-
-
 def _load(cfs: CatalogFS, root: str) -> dict:
-    """Resolve the committed snapshot: highest generation in ``_commits/``
-    (each commit file a full manifest, written put-if-absent — always
-    complete), falling back to the ``_manifest.json`` cache for indexes
-    adopted before the OCC log or whose log was vacuumed away.
-
-    O(1) at any history length (r13, shared with versioned._load_manifest
-    — the Delta ``_last_checkpoint`` discipline): the cache doubles as the
-    checkpoint pointer (full manifest + generation, refreshed every
-    commit); the fast path reads it and probes FORWARD for commits whose
-    cache refresh was lost, LISTing the log only when the pointer is
-    missing or stale beyond the vacuumed grace tail — on object stores
-    LIST is the expensive op this removes from the hot read path."""
-    cache_path = cfs.join(root, MANIFEST)
-    cached = None
-    if cfs.exists(cache_path):
-        with cfs.open_input(cache_path) as fh:
-            cached = json.loads(fh.read().decode("utf-8"))
-    if cached is not None and int(cached.get("generation", 0)) >= 1:
-        g = int(cached["generation"])
-        if cfs.exists(_commit_path(cfs, root, g)):
-            ahead = g
-            while cfs.exists(_commit_path(cfs, root, ahead + 1)):
-                ahead += 1
-            if ahead == g:
-                return cached
-            with cfs.open_input(_commit_path(cfs, root, ahead)) as fh:
-                return json.loads(fh.read().decode("utf-8"))
-    commits = cfs.join(root, COMMITS_DIR)
-    if cfs.isdir(commits):
-        gens = [
-            int(e[:-5]) for e in cfs.listdir(commits)
-            if e.endswith(".json") and e[:-5].isdigit()
-        ]
-        if gens:
-            with cfs.open_input(_commit_path(cfs, root, max(gens))) as fh:
-                return json.loads(fh.read().decode("utf-8"))
-    if cached is None:
-        with cfs.open_input(cache_path) as fh:
-            cached = json.loads(fh.read().decode("utf-8"))
-    return cached
-
-
-def _put_json(cfs: CatalogFS, path: str, obj: dict) -> None:
-    with cfs.open_output(path) as fh:
-        fh.write(json.dumps(obj).encode("utf-8"))
+    """Resolve the committed snapshot through the commit log
+    (commitlog.load: O(1) at any history length), falling back to the
+    ``_manifest.json`` cache for indexes adopted before the OCC log.
+    Raises FileNotFoundError when the root holds no manifest index."""
+    m = commitlog.load(cfs, root, MANIFEST, "generation")
+    if m is None:
+        raise FileNotFoundError(cfs.join(root, MANIFEST))
+    return m
 
 
 def _commit(cfs: CatalogFS, root: str, manifest: dict) -> None:
-    """Commit via put-if-absent on the generation-numbered commit file —
-    true multi-writer OCC (same primitive as versioned._commit_manifest):
-    the manifest's ``generation`` (already incremented by the caller) names
-    the commit file, racing mutators targeting the same generation get
-    exactly one winner, losers raise ConcurrentWriteError having committed
-    nothing (staged orphans; manifest_vacuum reaps). Mutators catch the
-    error, reload, and retry — this closes the load-merge-replace
-    lost-update window the r11 protocol retried on a generation PRE-check
-    (which left a sub-ms TOCTOU). After the winning commit the
-    ``_manifest.json`` cache is refreshed (atomic replace locally, plain
-    PUT on object stores); losing that write is harmless — the log is
-    authoritative and the cache at worst one generation stale."""
-    cfs.makedirs(cfs.join(root, COMMITS_DIR))
-    if not cfs.put_json_if_absent(
-        _commit_path(cfs, root, int(manifest["generation"])), manifest
+    """Commit at the manifest's ``generation`` (already incremented by
+    the caller) — true multi-writer OCC: racing mutators targeting the
+    same generation get exactly one winner, losers raise
+    ConcurrentWriteError having committed nothing (staged orphans;
+    manifest_vacuum reaps). Mutators catch the error, reload, and retry."""
+    if not commitlog.commit(
+        cfs, root, MANIFEST, int(manifest["generation"]), manifest
     ):
         raise ConcurrentWriteError(
             f"index generation {manifest['generation']} was committed by "
             "another mutator; nothing committed — reload and retry"
         )
-    target = cfs.join(root, MANIFEST)
-    if isinstance(cfs.fs, pafs.LocalFileSystem):
-        tmp = cfs.join(root, f".{MANIFEST}.{uuid.uuid4().hex[:8]}")
-        _put_json(cfs, tmp, manifest)
-        os.replace(tmp, target)
-    else:
-        _put_json(cfs, target, manifest)
 
 
 def manifest_snapshot(path: str) -> dict:
@@ -394,8 +335,7 @@ def manifest_artifacts(spark: SparkSession, sf_dir: str, path: str):
     if cfs.exists(cfs.join(root, MANIFEST)):
         m = _load(cfs, root)
         if m.get("artifacts"):
-            with cfs.open_input(cfs.join(root, m["artifacts"])) as fh:
-                a = json.loads(fh.read().decode("utf-8"))
+            a = cfs.get_json(cfs.join(root, m["artifacts"]))
             return a["centroids"], a["codebooks"]
     from .similarity import _index_artifacts
 
@@ -452,8 +392,8 @@ def manifest_rebuild(
         finally:
             rows.unpersist()
         art_name = f"_ann_artifacts.{uuid.uuid4().hex[:12]}.json"
-        _put_json(
-            cfs, cfs.join(root, art_name), {"centroids": cents, "codebooks": books}
+        cfs.put_json_atomic(
+            cfs.join(root, art_name), {"centroids": cents, "codebooks": books}
         )
         if before_commit is not None:
             before_commit()
@@ -594,16 +534,10 @@ def manifest_vacuum(path: str, retention_s: float | None = None) -> list[str]:
             cfs.rmtree(p)
             deleted.append(p)
         elif entry == COMMITS_DIR:
-            gens = sorted(
-                int(e[:-5]) for e in cfs.listdir(p)
-                if e.endswith(".json") and e[:-5].isdigit()
-            )
-            for g in gens[:-COMMIT_GRACE]:
-                cp = _commit_path(cfs, root, g)
-                if young(cp):
-                    continue
-                cfs.remove_any(cp)
-                deleted.append(cp)
+            deleted += [
+                commitlog.commit_path(cfs, root, g)
+                for g in commitlog.prune(cfs, root, young=young)
+            ]
         elif entry.startswith("cell="):
             cell = entry[len("cell="):]
             for e in cfs.listdir(p):

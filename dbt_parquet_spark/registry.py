@@ -124,7 +124,9 @@ _PRIORITY = (
     "q_retrieval_eval_hybrid",
     "q_context_pack_batch",
     "q_text_chunks",
-    "q_embedding_quantize",
+    # q_embedding_quantize rotated out: its array<int> codes column cannot
+    # be hashed by the driver's pandas canonicalization
+    "q_text_normalize",
     # selection / audit / sketches (r15 §5 banded offsets, §7 one-pass grams)
     "q_profile_table",
     "q_mixture_budget",

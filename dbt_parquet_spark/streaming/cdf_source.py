@@ -257,28 +257,23 @@ def register_cdf_source(spark) -> None:
 # --- Registered contract query ----------------------------------------------
 # Scaffold: a four-commit history exercising every streaming-supported hop
 # class — base append, merge-on-read delete, append, and a rollback ACROSS
-# the MoR delete (the resurrection case) — memoized per (app, sf_dir).
-
-_CDF_FOLLOW_CACHE: dict = {}
+# the MoR delete (the resurrection case) — memoized by versioned._scaffold.
 
 CDF_FOLLOW_OFFSET = 30_000_000
 
 
 def _cdf_follow_table(spark, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDF_FOLLOW_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from ..catalog import FilesystemCatalog
     from ..sources.readers import load_table
-    from ..versioned import delete_versioned, rollback_versioned, write_versioned
+    from ..versioned import (
+        _scaffold_catalog,
+        delete_versioned,
+        rollback_versioned,
+        write_versioned,
+    )
 
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="cdf_follow_db_"))
-    catalog.create_schema("vt")
+    catalog = _scaffold_catalog()
     rel = catalog.relation("docs_feed", "vt")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     write_versioned(
@@ -294,7 +289,6 @@ def _cdf_follow_table(spark, sf_dir: str):
         mode="append",
     )  # v3
     rollback_versioned(catalog, rel, 1)  # v4: resurrects the MoR-deleted rows
-    _CDF_FOLLOW_CACHE[key] = (catalog, rel)
     return catalog, rel
 
 
@@ -336,9 +330,10 @@ def _register_query():
         streaming path too). Commit versions are the stream's offsets, so
         checkpoint recovery replays exactly (versions are immutable);
         per-hop parallelism = changed files, cost O(changed bytes)."""
+        from ..versioned import _scaffold
         from .stream_ops import run_to_batch
 
-        catalog, rel = _cdf_follow_table(spark, sf_dir)
+        catalog, rel = _scaffold(_cdf_follow_table)(spark, sf_dir)
         register_cdf_source(spark)
         stream = (
             spark.readStream.format("versioned_cdf")

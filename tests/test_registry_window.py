@@ -64,7 +64,7 @@ ROTATION_IN_WINDOW = {
     "q_retrieval_eval_hybrid",
     "q_context_pack_batch",
     "q_text_chunks",
-    "q_embedding_quantize",
+    "q_text_normalize",
     # selection / audit / sketches
     "q_profile_table",
     "q_mixture_budget",
@@ -117,6 +117,28 @@ def test_driver_window_is_fully_oracle_backed():
     window = list(specs.values())[:DRIVER_WINDOW]
     missing = [s.name for s in window if s.oracle is None]
     assert not missing, f"rows-only queries inside the driver window: {missing}"
+
+
+def test_driver_window_outputs_are_hashable(spark):
+    """The driver canonicalizes every window query's pandas output with a
+    ``sort_values`` over all columns, which raises ``unhashable type`` on
+    array (list) and map (dict) cells, and struct cells arrive as a Row
+    from Spark but a dict from DuckDB — the row goes red whatever the
+    values. So no window query may return a top-level array, map or
+    struct column."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    from .conftest import SF_SMALL
+
+    nested = {}
+    for spec in list(load_all().values())[:DRIVER_WINDOW]:
+        cols = [
+            f.name for f in spec.builder(spark, SF_SMALL).schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
+        if cols:
+            nested[spec.name] = cols
+    assert not nested, f"nested top-level columns in the driver window: {nested}"
 
 
 def test_contract_and_rotation_queries_inside_window():
