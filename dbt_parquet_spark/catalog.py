@@ -233,53 +233,66 @@ class FilesystemCatalog:
         )
         return spark.createDataFrame(rows, out_schema)
 
+    def part_files(self, fs_path: str) -> list[str]:
+        """A part-file directory's parquet files, descending into hive
+        partition directories (``col=value/``); names Spark treats as
+        hidden (``_SUCCESS``, ``.crc``, ``_temporary/``) are skipped."""
+        files = []
+        for e in self.io.listdir(fs_path):
+            if e[:1] in ("_", "."):
+                continue
+            p = self.io.join(fs_path, e)
+            if e.endswith(".parquet"):
+                files.append(p)
+            elif "=" in e and self.io.isdir(p):
+                files.extend(self.part_files(p))
+        return files
+
+    def footer_stats(self, rel: Relation) -> tuple[int, int]:
+        """(row count, bytes) of the relation's current data, from parquet
+        FOOTERS — driver-side metadata reads, no Spark job. The row count
+        of a freshly written CTAS and of the docs artifact both come from
+        here. Versioned roots answer from the manifest's current version
+        (exact and already footer-derived; a directory walk would
+        double-count retained versions)."""
+        import pyarrow.parquet as pq
+
+        if self.is_versioned(rel):
+            from .versioned import _fpath, _load_manifest
+
+            m = _load_manifest(self, rel)
+            entry = m["versions"][str(m["current"])]
+            root = self.fs_path(rel)
+            return entry["rows"], sum(
+                self.io.getsize(_fpath(self.io, root, f)) for f in entry["files"]
+            )
+        fs_path = self.fs_path(rel)
+        files = self.part_files(fs_path) if self.io.isdir(fs_path) else [fs_path]
+        rows = 0
+        nbytes = 0
+        for f in files:
+            with self.io.open_input(f) as fh:
+                rows += pq.ParquetFile(fh).metadata.num_rows
+            nbytes += self.io.getsize(f)
+        return rows, nbytes
+
     def docs_artifact(self, spark: SparkSession, out_path: str | None = None) -> dict:
         """dbt-docs ``catalog.json``-shaped artifact (the consumer of the
         reference's catalog macro, reference macros/catalog.sql:5-31): one
         node per relation with column name/index/type plus row-count and
-        byte-size stats. Everything comes from parquet FOOTERS — driver-side
-        metadata reads, no Spark job, so generating docs over a 100 TB lake
-        costs one footer read per table, not a scan.
+        byte-size stats. Everything comes from parquet FOOTERS —
+        driver-side metadata reads, so generating docs over a 100 TB lake
+        costs one footer read per table, not a scan. No Spark job runs for
+        a table whose footer carries Spark's schema metadata (every table
+        this package writes); a table written by another writer (pyarrow,
+        DuckDB) still costs one Spark schema-inference job for its columns.
         """
         import json
-
-        import pyarrow.parquet as pq
-
-        def footer_stats(fs_path: str) -> tuple[int, int]:
-            if self.io.isdir(fs_path):
-                files = [
-                    self.io.join(fs_path, e)
-                    for e in self.io.listdir(fs_path)
-                    if e.endswith(".parquet")
-                ]
-            else:
-                files = [fs_path]
-            rows = 0
-            nbytes = 0
-            for f in files:
-                with self.io.open_input(f) as fh:
-                    rows += pq.ParquetFile(fh).metadata.num_rows
-                nbytes += self.io.getsize(f)
-            return rows, nbytes
 
         nodes: dict = {}
         for schema in self.list_schemas():
             for rel in self.list_relations(schema):
-                if self.is_versioned(rel):
-                    # manifest metadata is exact and already footer-derived;
-                    # a directory walk would double-count retained versions
-                    from .versioned import _fpath, _load_manifest
-
-                    m = _load_manifest(self, rel)
-                    entry = m["versions"][str(m["current"])]
-                    root = self.fs_path(rel)
-                    n_rows = entry["rows"]
-                    n_bytes = sum(
-                        self.io.getsize(_fpath(self.io, root, f))
-                        for f in entry["files"]
-                    )
-                else:
-                    n_rows, n_bytes = footer_stats(self.fs_path(rel))
+                n_rows, n_bytes = self.footer_stats(rel)
                 columns = {
                     fld.name: {
                         "type": fld.dataType.simpleString(),

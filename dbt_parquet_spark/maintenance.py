@@ -152,11 +152,9 @@ def row_group_stats(
 
 def _table_files(catalog: FilesystemCatalog, rel: Relation) -> list[str]:
     """The relation's parquet data files, as fs paths (single file or the
-    part files of a directory table)."""
-    io, fs_path = catalog.io, catalog.fs_path(rel)
-    if io.isdir(fs_path):
-        return [io.join(fs_path, f) for f in io.listdir(fs_path) if f.endswith(".parquet")]
-    return [fs_path]
+    part files of a directory table, hive partitions included)."""
+    fs_path = catalog.fs_path(rel)
+    return catalog.part_files(fs_path) if catalog.io.isdir(fs_path) else [fs_path]
 
 
 def _path_bytes(catalog: FilesystemCatalog, rel: Relation) -> int:

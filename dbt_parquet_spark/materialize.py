@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import FilesystemCatalog, Relation
 from .fs import CatalogFS
+from .sources.readers import read_parquet
 
 
 def _swap_into_place(io: CatalogFS, src: str, dest: str) -> None:
@@ -100,7 +101,7 @@ def create_table_as(
         _swap_into_place(io, fs_tmp, fs_dest)
     if register:
         return catalog.register_view(spark, rel)
-    return spark.read.parquet(rel.path)
+    return read_parquet(spark, rel.path)
 
 
 # -- seeds (reference impl.py:151-163, 185-208) -----------------------------

@@ -18,11 +18,12 @@ from __future__ import annotations
 
 import graphlib
 import os
+import posixpath
 import re
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .catalog import DEFAULT_SCHEMA, FilesystemCatalog, Relation
 from .materialize import create_table_as
@@ -185,24 +186,6 @@ class Project:
         model = self.models[name]
         return self.catalog.relation(model.name, model.schema)
 
-    def _register_model_view(
-        self, spark: SparkSession, model: Model, rel: Relation
-    ) -> DataFrame | None:
-        """(Re-)register a model's view honoring its materialization: a
-        versioned model's view must read the manifest's CURRENT snapshot
-        (explicit file list) — a plain directory view over its root would
-        union every retained version's files."""
-        if model.materialized == "versioned":
-            from .versioned import VERSIONS_MANIFEST, read_versioned
-
-            io = self.catalog.io
-            if not io.exists(io.join(self.catalog.fs_path(rel), VERSIONS_MANIFEST)):
-                return None  # not built yet (first run builds + registers)
-            df = read_versioned(spark, self.catalog, rel)
-            df.createOrReplaceTempView(rel.view_name)
-            return df
-        return self.catalog.register_view(spark, rel)
-
     def dag_order(self) -> list[str]:
         ts = graphlib.TopologicalSorter(
             {name: set(m.refs) for name, m in self.models.items()}
@@ -235,13 +218,14 @@ class Project:
 
     # -- incremental-run state (dbt `state:modified` semantics) ------------
     # Content-addressed freshness: each model's state hash is a MERKLE hash
-    # of its compiled SQL, its upstream models' state hashes, and the byte-
-    # level fingerprints of the sources it reads. A model is skippable iff
-    # its table exists AND its recorded hash equals the current one — so
-    # editing a model's SQL invalidates it, and invalidation cascades to
-    # every descendant through the hash chain, while untouched siblings
-    # skip. The state file lives in the database root (catalog FS, works on
-    # any backend) and is rewritten after every run.
+    # of its raw and compiled SQL, its upstream models' state hashes, and
+    # the byte-level fingerprints of the sources it reads. A model is
+    # skippable iff its table exists AND its recorded hash equals the
+    # current one — so editing a model's SQL (comments included)
+    # invalidates it, and invalidation cascades to every descendant through
+    # the hash chain, while untouched siblings skip. The state file lives in
+    # the database root (catalog FS, works on any backend) and is rewritten
+    # after every run.
 
     _STATE_FILE = ".run_state.json"
 
@@ -302,9 +286,7 @@ class Project:
         entries: list[tuple[str, int, int]] = []
         if io.isdir(path):
             files = [
-                (e, io.join(path, e))
-                for e in io.listdir(path)
-                if e.endswith(".parquet")
+                (posixpath.relpath(f, path), f) for f in self.catalog.part_files(path)
             ]
         elif io.isfile(path):
             files = [(table, path)]
@@ -333,7 +315,13 @@ class Project:
             # materialization is stripped from compiled SQL, so it must
             # enter the hash on its own: switching table <-> versioned is a
             # real change that must re-materialize under state="modified"
-            parts = [self.compile_sql(model), f"materialized:{model.materialized}"]
+            # the raw text enters too (dbt's raw-file checksum): compiling
+            # strips comments, so a comment-only edit must still count
+            parts = [
+                model.sql,
+                self.compile_sql(model),
+                f"materialized:{model.materialized}",
+            ]
             for ref in sorted(set(model.refs)):
                 if ref in self.models:
                     parts.append(f"ref:{ref}:{h(ref)}")
@@ -364,8 +352,8 @@ class Project:
         connect).
 
         ``state="modified"`` enables incremental runs: a model whose table
-        exists and whose Merkle state hash (compiled SQL + upstream hashes
-        + source fingerprints) matches the recorded one is SKIPPED
+        exists and whose Merkle state hash (raw and compiled SQL + upstream
+        hashes + source fingerprints) matches the recorded one is SKIPPED
         (``RunResult.skipped``, rows=-1); everything downstream of a real
         change re-materializes. The recorded state updates after every run
         regardless of mode, so a full run primes later incremental ones."""
@@ -374,15 +362,11 @@ class Project:
         if state not in (None, "modified"):
             raise ValueError(f"unsupported state mode: {state!r}")
         register_duckdb_compat(spark)  # DuckDB-dialect model SQL runs unchanged
+        # every existing relation, model tables included: a skipped model's
+        # view is registered here once (versioned roots over the manifest's
+        # CURRENT snapshot — register_view resolves them, never a directory
+        # scan over every retained version's files)
         self.catalog.register_all_views(spark)
-        # versioned models' roots hold EVERY version's files — the plain
-        # directory view register_all_views just made would read them all.
-        # Re-register those views over the manifest's CURRENT snapshot, so
-        # refs to unselected versioned models resolve correctly.
-        for m in self.models.values():
-            rel = self._model_relation(m.name)
-            if m.materialized == "versioned" and self.catalog.exists(rel):
-                self._register_model_view(spark, m, rel)
         # external source() declarations resolve to views over their lake
         # paths; a temp view is just a named plan, so partition pruning and
         # filter pushdown reach the scan through it unchanged (plan-gated)
@@ -414,25 +398,25 @@ class Project:
                 and recorded.get(name) == current[name]
                 and self.catalog.exists(rel)
             ):
-                # fresh: keep the table, just (re-)register its view
-                self._register_model_view(spark, model, rel)
+                # fresh: keep the table; its view was registered up front
                 return RunResult(model=name, relation=rel, rows=-1, skipped=True)
             if model.schema != DEFAULT_SCHEMA:
                 self.catalog.create_schema(model.schema)
             if model.materialized == "versioned":
-                from .versioned import version_history, write_versioned
+                from .versioned import write_versioned
 
                 write_versioned(
                     spark, self.catalog, rel, spark.sql(self.compile_sql(model))
                 )
-                self._register_model_view(spark, model, rel)
-                # row count is free: it came from the staged parquet footers
-                rows = version_history(self.catalog, rel)[-1]["rows"]
-                return RunResult(model=name, relation=rel, rows=rows)
-            df = create_table_as(
-                spark, self.catalog, rel, self.compile_sql(model), single_file=single_file
-            )
-            return RunResult(model=name, relation=rel, rows=df.count())
+                self.catalog.register_view(spark, rel)
+            else:
+                create_table_as(
+                    spark, self.catalog, rel, self.compile_sql(model),
+                    single_file=single_file,
+                )
+            # the written files' footers (or the manifest) hold the row
+            # count: no count job, and the same numbers docs_artifact reports
+            return RunResult(model=name, relation=rel, rows=self.catalog.footer_stats(rel)[0])
 
         futures: dict = {}
         with ThreadPoolExecutor(max_workers=threads) as pool:

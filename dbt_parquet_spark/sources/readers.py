@@ -78,28 +78,35 @@ def _stat_key(path: str):
 # Footer-probe memo — metadata, never data: load_table re-probes the SAME
 # immutable file on every call (each query build, each bench rep), and the
 # pyarrow open+footer-parse is a few ms of pure Python per table per call.
-_NS_COLS_MEMO: dict[str, tuple] = {}
+_FOOTER_MEMO: dict[str, tuple] = {}
+
+# The key-value footer entry every Spark-written parquet file carries: the
+# writer's Catalyst schema as JSON. Spark's own schema inference
+# (ParquetFileFormat.readSchemaFromFooter) returns exactly this when present.
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
 
-def _ns_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — footer-only probe.
+def _footer_probe(path: str) -> tuple[list[str], str | None]:
+    """(columns stored as parquet TIMESTAMP(NANOS), Spark row-metadata
+    schema JSON or None) from one footer — no Spark job.
 
     Resolves through pyarrow.fs so the probe works on any path spelling the
     engine reads (bare local path, file://, s3a://...); an unreachable or
-    unlistable location degrades to "no nanos columns" rather than failing
-    the read — Spark itself will surface a real IO error with context."""
+    unlistable location degrades to "no nanos columns, no footer schema"
+    rather than failing the read — Spark itself will surface a real IO
+    error with context."""
     sk = _stat_key(path)
     if sk is not None:
-        hit = _memo_get(_NS_COLS_MEMO, path, sk)
+        hit = _memo_get(_FOOTER_MEMO, path, sk)
         if hit is not None:
             return hit
-    out = _ns_timestamp_columns_uncached(path)
+    out = _footer_probe_uncached(path)
     if sk is not None:
-        _memo_put(_NS_COLS_MEMO, path, sk, out)
+        _memo_put(_FOOTER_MEMO, path, sk, out)
     return out
 
 
-def _ns_timestamp_columns_uncached(path: str) -> list[str]:
+def _footer_probe_uncached(path: str) -> tuple[list[str], str | None]:
     import pyarrow as pa
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
@@ -113,23 +120,31 @@ def _ns_timestamp_columns_uncached(path: str) -> list[str]:
         info = fs.get_file_info(fpath)
         if info.type == pafs.FileType.Directory:
             # recursive: hive-partitioned sources nest their part files
-            # under col=value/ directories (read_partitioned)
+            # under col=value/ directories (read_partitioned); names Spark
+            # treats as hidden (_SUCCESS, .crc, _temporary/) are skipped
             sel = pafs.FileSelector(fpath, recursive=True)
             parts = sorted(
-                i.path for i in fs.get_file_info(sel) if i.path.endswith(".parquet")
+                i.path
+                for i in fs.get_file_info(sel)
+                if i.path.endswith(".parquet")
+                and not any(
+                    seg[:1] in ("_", ".")
+                    for seg in i.path[len(fpath):].split("/")
+                )
             )
             if not parts:
-                return []
+                return [], None
             fpath = parts[0]
         with fs.open_input_file(fpath) as f:
             pf = pq.ParquetFile(f)
-            return _ns_cols_of(pf)
+            spark_schema = (pf.metadata.metadata or {}).get(SPARK_ROW_METADATA.encode())
+            return _ns_cols_of(pf), spark_schema.decode() if spark_schema else None
     except (OSError, pa.lib.ArrowException):
         # ArrowException covers ArrowInvalid AND ArrowNotImplementedError —
         # from_uri raises the latter for schemes without compiled filesystem
         # support (hdfs:// without libhdfs, gs:// without gcsfs); the probe
         # must defer to Spark's own reader there, not crash the read.
-        return []
+        return [], None
 
 
 def _ns_cols_of(pf) -> list[str]:
@@ -175,22 +190,14 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     timezone — wall-clock-preserving under ANY session tz (unlike disabling
     NTZ inference, which reinterprets stored micros as UTC instants and
     shifts the rendering under non-UTC sessions).
-    """
-    from pyspark.sql import functions as F
 
-    ns_cols = _ns_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    Spark-written files answer the schema question from their footer:
+    without ``merge_schema``, the first part file's Spark row-metadata
+    schema (the one Spark's inference would return) is handed to the
+    reader, so resolving the DataFrame runs no Spark job. Files without
+    that key (pyarrow and other writers) keep Spark's inference.
+    """
+    return _scan(spark, path, {"mergeSchema": "true"} if merge_schema else {})
 
 
 def read_partitioned(spark: SparkSession, path: str, base_path: str | None = None) -> DataFrame:
@@ -205,15 +212,24 @@ def read_partitioned(spark: SparkSession, path: str, base_path: str | None = Non
     ``base_path`` pins partition-column discovery when ``path`` points
     INSIDE the partition tree (e.g. reading one ``date=2024-01-01/``
     subtree while keeping ``date`` as a column). Timestamp normalization
-    (ns/NTZ) matches read_parquet — the probe walks the tree recursively."""
-    from pyspark.sql import functions as F
+    (ns/NTZ) and the footer-provided schema match read_parquet — the probe
+    walks the tree recursively."""
+    return _scan(spark, path, {} if base_path is None else {"basePath": base_path})
 
-    ns_cols = _ns_timestamp_columns(path)
+
+def _scan(spark: SparkSession, path: str, options: dict[str, str]) -> DataFrame:
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    ns_cols, footer_schema = _footer_probe(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
+    reader = spark.read.options(**options)
+    if footer_schema is not None and "mergeSchema" not in options:
+        # partition columns are not in the footer; discovery still adds them
+        reader = reader.schema(StructType.fromJson(json.loads(footer_schema)))
     df = reader.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -187,6 +187,15 @@ def _with_pos(df: DataFrame) -> DataFrame:
     ).withColumn("_dv_pos", F.col("_metadata.row_index"))
 
 
+def _dv_pairs(spark: SparkSession, io, root: str, names) -> DataFrame:
+    """The (file, pos) pairs of deletion-vector sidecars ``names``. Their
+    schema is fixed (``_with_pos``'s coordinates), so the read hands it to
+    Spark instead of paying a schema-inference job per read."""
+    return spark.read.schema("file string, pos bigint").parquet(
+        *[io.spark_url(_fpath(io, root, f)) for f in names]
+    )
+
+
 def _snapshot_read(
     spark: SparkSession, io, root: str, names: list[str], entry: dict,
     keep_pos: bool = False,
@@ -237,9 +246,7 @@ def _snapshot_read(
             if c not in out.columns:
                 out = out.withColumn(c, F.lit(None).cast("string"))
     if dv and names:
-        dvdf = spark.read.parquet(
-            *[io.spark_url(_fpath(io, root, f)) for f in dv]
-        ).select("file", "pos")
+        dvdf = _dv_pairs(spark, io, root, dv)
         out = out.join(
             dvdf,
             (out["_dv_file"] == dvdf["file"]) & (out["_dv_pos"] == dvdf["pos"]),
@@ -841,9 +848,9 @@ def _dv_prune(
     dv = cur.get("dv") or []
     if not dv or not untouched:
         return []
-    pairs = spark.read.parquet(
-        *[io.spark_url(_fpath(io, root, f)) for f in dv]
-    ).filter(F.col("file").isin([_basename(f) for f in untouched]))
+    pairs = _dv_pairs(spark, io, root, dv).filter(
+        F.col("file").isin([_basename(f) for f in untouched])
+    )
     names, n_pairs, _ = _stage_files(
         spark, catalog, rel, pairs, version, (), prefix="dv"
     )
@@ -864,8 +871,11 @@ def _dv_dead_rows(
     dv = entry.get("dv") or []
     if not dv or not files:
         return 0
-    dvdf = spark.read.parquet(*[io.spark_url(_fpath(io, root, f)) for f in dv])
-    return dvdf.filter(F.col("file").isin([_basename(f) for f in files])).count()
+    return (
+        _dv_pairs(spark, io, root, dv)
+        .filter(F.col("file").isin([_basename(f) for f in files]))
+        .count()
+    )
 
 
 def merge_versioned(
@@ -1302,9 +1312,7 @@ def read_versioned_changes(
         def _pairs(names: set) -> DataFrame | None:
             if not names:
                 return None
-            return spark.read.parquet(
-                *[io.spark_url(_fpath(io, root, f)) for f in sorted(names)]
-            ).select("file", "pos")
+            return _dv_pairs(spark, io, root, sorted(names))
 
         shared_df = spark.createDataFrame(
             [(_basename(f),) for f in sorted(shared)], "file string"

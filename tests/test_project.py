@@ -308,6 +308,27 @@ def test_incremental_run_skips_unmodified(spark, db):
     assert spark.table("wide").first().animals == "OCTOPUS"
 
 
+def test_comment_only_edit_counts_as_modified(spark, db):
+    """Compiling strips comments (and the QUALIFY rewrite drops a trailing
+    one), so the state hash also covers the raw model text: a trailing-
+    comment edit rebuilds exactly the edited model."""
+    _seed_source(spark, db)
+    project = Project(db)
+    qualify_sql = (
+        "SELECT animals, n_legs FROM {{ source('source_schema', 'animals') }} "
+        "QUALIFY row_number() OVER (ORDER BY n_legs DESC) = 1"
+    )
+    project.add(Model("heaviest", qualify_sql))
+    project.add(Model("all_rows", "SELECT * FROM {{ source('source_schema', 'animals') }}"))
+    project.run(spark, state="modified")
+    edited = Model("heaviest", qualify_sql + "\n-- trailing note")
+    assert project.compile_sql(edited) == project.compile_sql(Model("heaviest", qualify_sql))
+    project.add(edited)
+    r = project.run(spark, state="modified")
+    assert {n for n, res in r.items() if not res.skipped} == {"heaviest"}
+    assert r["heaviest"].rows == 1
+
+
 def test_incremental_run_rebuilds_dropped_table(spark, db):
     """A fresh hash with a MISSING table must still rebuild (hash alone is
     not evidence the output exists)."""
